@@ -15,45 +15,26 @@ object Sources {
 
   /** Read one named testdata table (`<dir>/<name>.parquet`).
     *
-    * The resolved relation is memoized PER (session, path) — the catalog
-    * behaviour `spark.table` gives over a metastore, hand-rolled for bare
-    * paths. Measured round-20 (tools/ReadCostProbe): every
+    * The resolved relation is memoized per session in [[Memo]] — the
+    * catalog behaviour `spark.table` gives over a metastore, hand-rolled
+    * for bare paths. Measured round 20 (commit 659884b): every
     * `spark.read.parquet` costs ~90 ms of warm driver time (footer
     * schema read + relation construction), and the 142-query registry
-    * re-resolved each table on every query build of every bench pass —
-    * tens of seconds per run of pure re-resolution (guide §5: the driver
-    * should do almost no data work). The memo holds the UNEXECUTED
-    * logical relation only — schema + file index, no rows, no results;
-    * every action still computes from the parquet files. Keyed weakly by
-    * session (dead sessions GC their entries) and by path; sound because
-    * source tables are immutable within a session — the engine never
-    * writes into a table dir it reads through here (self-joins of the
-    * shared relation are what DeduplicateRelations exists for).
+    * re-resolved each table on every query build of every bench pass.
+    * The memo holds the UNEXECUTED logical relation only — schema + file
+    * index, no rows, no results; every action still computes from the
+    * parquet files. A hit is validated against the files' fingerprint, so
+    * a rewritten table is re-resolved.
     */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     pathTable(spark, s"$dir/$name.parquet")
 
-  /** [[table]]'s memo for non-catalog parquet paths (the per-JVM index
-    * stores: BM25 postings, minhash signatures). Same unexecuted-relation
-    * semantics; the CALLER asserts the path is write-once-then-read for
-    * the session's lifetime — never re-resolve through this for a path
-    * that is rewritten.
+  /** [[table]]'s memo for non-catalog parquet paths (the index stores:
+    * BM25 postings, minhash signatures). Same unexecuted-relation and
+    * fingerprint semantics.
     */
-  def pathTable(spark: SparkSession, path: String): DataFrame = {
-    val perSession = tableMemo.synchronized {
-      var m = tableMemo.get(spark)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-        tableMemo.put(spark, m)
-      }
-      m
-    }
-    perSession.getOrElseUpdate(path, spark.read.parquet(path))
-  }
-
-  private val tableMemo =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, DataFrame]]
+  def pathTable(spark: SparkSession, path: String): DataFrame =
+    Memo.files(spark, "parquet", path)(spark.read.parquet(path))
 
   /** Epoch-micros BIGINT view of an event-time column, adaptive to the
     * physical type the testdata generator has used across rounds:

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Hot-block guard for the LSH-family candidate generators
@@ -55,7 +55,7 @@ import org.apache.spark.sql.functions._
   * but by the same token the pile holds most of the member mass, far over
   * the few-percent share any healthy block has. The floor keeps auto a
   * guaranteed no-op on small/well-behaved corpora (every oracle corpus's
-  * max block is ≤ 45 — measured, BucketProbe/SCALE.md), so default-on
+  * max block is ≤ 45 — measured, SCALE.md round 8), so default-on
   * auto preserves the exact uncapped pair set there — and, because auto
   * resolves via a preflight job ([[resolveAutoCap]]), the healthy-corpus
   * plan is bit-identical to uncapped (zero plan overhead).
@@ -70,20 +70,15 @@ object Blocking {
   final case class AutoCapResolution(cap: Long, maxBlock: Long, p999: Long,
                                      mass: Long, engaged: Boolean)
 
-  /** Snapshot of this session's auto-cap decisions (keyed by the block
-    * frame's semantic-plan hash — one entry per distinct corpus/banding).
-    * The guard is silent by design (no logging from inside operators);
-    * production users audit WHEN it engaged — and on what evidence —
-    * here. Cleared alongside [[clearAutoCapMemo]].
+  /** This session's auto-cap decisions (one per distinct corpus/banding
+    * plan in the [[graft.io.Memo]]). The guard is silent by design (no
+    * logging from inside operators); production users audit WHEN it
+    * engaged — and on what evidence — here.
     */
-  def resolutions: Map[Int, AutoCapResolution] = {
-    val b = Map.newBuilder[Int, AutoCapResolution]
-    resolutionLog.forEach((k, v) => b += (k.intValue -> v))
-    b.result()
-  }
+  def resolutions(spark: SparkSession): Seq[AutoCapResolution] =
+    graft.io.Memo.values[Option[AutoCapResolution]](spark, AutoCapTag).flatten
 
-  private val resolutionLog =
-    new java.util.concurrent.ConcurrentHashMap[Integer, AutoCapResolution]()
+  private val AutoCapTag = "blocking.autoCap"
 
   /** Sentinel for `maxBlock`: derive the cap from the block-size
     * distribution (see object doc). The operator-level default.
@@ -93,7 +88,7 @@ object Blocking {
   /** Auto-cap floor: blocks at or below this size are never capped. 256²
     * within-block candidate rows ≈ 65k — trivial to verify — while the
     * pile-ups the guard exists for are 10⁴–10⁶ members. Measured
-    * (BucketProbe, SCALE.md round 8): minhash 16×4 bucket max is 3 at
+    * (SCALE.md round 8): minhash 16×4 bucket max is 3 at
     * sf0.01 / 4 at sf0.1 — two orders below the floor.
     */
   val AutoFloor: Long = 256L
@@ -142,61 +137,29 @@ object Blocking {
     // Memoized on the SEMANTIC plan of the block frame: the dominant
     // deployment shape is many dedup queries over one stored corpus, and
     // re-running the preflight per call would tax every warm query ~a job
-    // (~0.3-0.5 s at sf0.1 local). The 32-bit semanticHash is only the
-    // BUCKET key — the entry stores the canonicalized plan itself and a
-    // hit requires full structural equality, so two distinct plans whose
-    // hashes collide can never share a cap resolution (a collision would
-    // silently engage capping on a healthy corpus or skip it on a
-    // degenerate one; the losing plan just re-preflights each call).
-    // Same canonical plan ⇒ same source data in Spark's model — file
-    // listings are NOT part of relation equality (InMemoryFileIndex
-    // compares root paths), so appending files under an already-resolved
-    // store path in the SAME session leaves the cap one batch stale: a
-    // plan-shape (perf) consideration only, and [[clearAutoCapMemo]]
-    // resets it ([[graft.pipelines.CorpusStore]]'s mutators call it).
-    // Bounded: cleared at 1024 plans.
-    //
-    // The preflight Spark job runs OUTSIDE the map (publish via
-    // putIfAbsent), so concurrent resolutions of different corpora never
-    // serialize on a ConcurrentHashMap bin lock; two threads racing the
-    // same cold plan at worst both run the bounded preflight and agree on
-    // the (deterministic) result.
-    val plan = blocks.queryExecution.logical.canonicalized
-    val key = Integer.valueOf(plan.hashCode())
-    val cached = autoCapMemo.get(key)
-    if (cached != null && cached._1 == plan) cached._2
-    else {
-      if (autoCapMemo.size > 1024) { autoCapMemo.clear(); resolutionLog.clear() }
+    // (~0.3-0.5 s at sf0.1 local). [[graft.io.Memo.plan]] keys on the
+    // canonicalized plan itself (a hit requires full structural equality)
+    // and validates the files under it, so a rewritten or appended store
+    // path re-runs the preflight.
+    val resolution = graft.io.Memo.plan(blocks, AutoCapTag) {
       val r = blocks.groupBy(blockCols.map(col): _*)
         .agg(count(lit(1)).as("__bsz"))
         .agg(max(col("__bsz")).as("mx"),
           percentile_approx(col("__bsz"), lit(0.999), lit(10000)).as("p999"),
           sum(col("__bsz")).as("mass"))
         .collect()(0)
-      val eff =
-        if (r.isNullAt(0)) 0 // empty corpus: nothing to cap
-        else {
-          val cap = math.max(AutoFloor,
-            math.min(AutoFactor * r.getAs[Long]("p999"),
-              (AutoMassFrac * r.getAs[Long]("mass")).toLong))
-          val engaged = r.getAs[Long]("mx") > cap
-          resolutionLog.put(key, AutoCapResolution(cap, r.getAs[Long]("mx"),
-            r.getAs[Long]("p999"), r.getAs[Long]("mass"), engaged))
-          if (!engaged) 0 else cap.min(Int.MaxValue.toLong).toInt
-        }
-      autoCapMemo.putIfAbsent(key, (plan, eff))
-      eff
+      if (r.isNullAt(0)) None // empty corpus: nothing to cap
+      else {
+        val cap = math.max(AutoFloor,
+          math.min(AutoFactor * r.getAs[Long]("p999"),
+            (AutoMassFrac * r.getAs[Long]("mass")).toLong))
+        Some(AutoCapResolution(cap, r.getAs[Long]("mx"), r.getAs[Long]("p999"),
+          r.getAs[Long]("mass"), r.getAs[Long]("mx") > cap))
+      }
     }
+    resolution.filter(_.engaged)
+      .fold(0)(_.cap.min(Int.MaxValue.toLong).toInt)
   }
-
-  private val autoCapMemo = new java.util.concurrent.ConcurrentHashMap[
-    Integer, (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int)]()
-
-  /** Drop memoized auto-cap resolutions and the observability log (tests;
-    * or after appending to a corpus store whose path was already resolved
-    * in this session).
-    */
-  def clearAutoCapMemo(): Unit = { autoCapMemo.clear(); resolutionLog.clear() }
 
   /** Candidate pairs (id_a < id_b, distinct) from a block-membership table
     * (one row per member and block), capping per-block fan-out at
@@ -241,7 +204,7 @@ object Blocking {
       // unpruned one (star/rep branches), so member rows cross the wire
       // at most TWICE — down from the round-8 chain, and with zero
       // planner-inserted block-key shuffles (spec-locked). Measured
-      // (SkewBench A/B, SCALE.md round 9): 32k/128k piles 16.4/17.4 →
+      // (SCALE.md round 9 A/B): 32k/128k piles 16.4/17.4 →
       // 13.2/12.9 s. Output is the exact pair set of the round-8 shape
       // (BlockingSpec equality), and the healthy-corpus branch above is
       // untouched. Per-block skew note: repartitioning by block key puts

@@ -47,7 +47,7 @@ object PageRank {
     * under the threshold each iteration runs ONE exchange (the contrib
     * groupBy) with every join map-side, instead of three.
     *
-    * Default 64k nodes (~1.5 MB of unsafe rows): `tools/GraphBroadcastProbe`
+    * Default 64k nodes (~1.5 MB of unsafe rows): SCALE.md round 13
     * measured the regimes tied at 50k and shuffled WINNING from 150k up on
     * local[32] — per-iteration broadcast pays a driver collect + hashed-
     * relation build × joins × rounds, which outgrows the (network-free
@@ -298,7 +298,7 @@ object PageRank {
     // join output keeps eod's partitioning — pre-partitioning eod by dst
     // HERE (one exchange at prepare) lets every iteration's contrib
     // groupBy(dst) reuse it through the alias-aware Project: ZERO
-    // exchanges per iteration (GraphZeroExchangeAB measured the win). In
+    // exchanges per iteration (SCALE.md round 13 measured the win). In
     // the shuffled regime iterations join BY SRC, so dst-partitioning
     // would force a re-exchange per round — left as-is there.
     val eodBase = e.join(outdeg, "src")
@@ -357,8 +357,8 @@ object PageRank {
   }
 
   /** Gate + collect for the local fast paths: a bounded COUNT probe
-    * (`limit(localMax+1).count()` — the exact job LocalGateProbe
-    * measures; early-stopping, no row transfer), then the collect only
+    * (`limit(localMax+1).count()` — the exact job SCALE.md round 14
+    * measured; early-stopping, no row transfer), then the collect only
     * when the count qualifies (advice, round 14: the previous
     * collect-first gate pulled up to localMax+1 boxed Rows to the driver
     * per invocation on graphs ABOVE the threshold — ~2M GenericRows at
@@ -524,7 +524,7 @@ object PageRank {
     // dangling-aware lineage-truncation cadence — see [[checkpointCadence]]:
     // geometric nest (two rank references per round) cuts every 3, linear
     // nest (no dangling stage) every 8; each skipped cut saves an eager
-    // |V|-row materialize+store pass (TextRankCadenceAB measured the win)
+    // |V|-row materialize+store pass (SCALE.md round 13 measured the win)
     val cadence = checkpointCadence(ctx.hasDangling)
     var ranks = ctx.r0
     var prev: Option[DataFrame] = None

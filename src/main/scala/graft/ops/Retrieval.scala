@@ -60,8 +60,8 @@ object Retrieval {
       .filter(col("token").isInCollection(terms))
       .groupBy(col(idCol), col("dl"), col("token"))
       .agg(count(lit(1)).as("tf"))
-    val (n, avgdl, tfP) = overlapStatsWithPostings(statsDf, tf)
-    scoreBm25(tfP, idCol, terms, n, avgdl, k1, b, topN, scoreDecimals)
+    overlapStatsWithPostings(statsDf, tf)(
+      scoreBm25(_, idCol, terms, _, _, k1, b, topN, scoreDecimals))
   }
 
   /** Run the one-row corpus-stats aggregate CONCURRENTLY with the
@@ -72,21 +72,28 @@ object Retrieval {
     * it). Round-19 measured the in-plan alternative (stats as a broadcast
     * cross-join) WORSE — it put the stats subtree on the scoring job's
     * critical path; this form keeps the plans untouched and the scores
-    * bit-identical, and only re-orders job submission. Returns (n, avgdl,
-    * persisted postings) — [[scoreBm25]] reads the postings from the
-    * cache its own persist call then finds already filled.
+    * bit-identical, and only re-orders job submission.
+    *
+    * The postings frame is pinned here, ONCE, and handed to `score` with
+    * (n, avgdl); the pin is released in a `finally`, so it is freed even
+    * when the stats job, the fill, or the scoring throws. Both jobs are
+    * awaited before a failure surfaces.
     */
-  private def overlapStatsWithPostings(statsDf: DataFrame,
-                                       tf: DataFrame): (Long, Double, DataFrame) = {
+  private def overlapStatsWithPostings(statsDf: DataFrame, tf: DataFrame)(
+      score: (DataFrame, Long, Double) => DataFrame): DataFrame = {
     val tfP = tf.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val statsF = scala.concurrent.Future(statsDf.head())
-    tfP.count() // fills the postings cache while the stats job runs
-    val stats = scala.concurrent.Await.result(
-      statsF, scala.concurrent.duration.Duration.Inf)
-    val n = stats.getLong(0)
-    (n, stats.getLong(1).toDouble / n, tfP)
+    try {
+      implicit val ec: scala.concurrent.ExecutionContext =
+        scala.concurrent.ExecutionContext.global
+      val statsF = scala.concurrent.Future(statsDf.head())
+      // fills the postings cache while the stats job runs
+      val filled = scala.util.Try(tfP.count())
+      val stats = scala.util.Try(scala.concurrent.Await.result(
+        statsF, scala.concurrent.duration.Duration.Inf))
+      filled.get
+      val n = stats.get.getLong(0)
+      score(tfP, n, stats.get.getLong(1).toDouble / n)
+    } finally tfP.unpersist()
   }
 
   /** Build the INVERTED INDEX: full postings (token, id, tf, dl) plus a
@@ -122,40 +129,38 @@ object Retrieval {
                     k1: Double = 1.2, b: Double = 0.75,
                     topN: Int = 20, scoreDecimals: Int = 6): DataFrame = {
     require(terms.nonEmpty, "bm25 needs at least one query term")
-    // memoized resolution (round-20): the index is write-once per (JVM,
-    // corpus dir) — re-resolving the two relations cost ~90 ms of driver
-    // time per query build (tools/ReadCostProbe)
+    // memoized resolution ([[graft.io.Sources.pathTable]]): re-resolving
+    // the two relations costs ~90 ms of driver time per query build
     val statsDf = graft.io.Sources.pathTable(spark, s"$indexDir/stats")
     val tf = graft.io.Sources.pathTable(spark, s"$indexDir/postings")
       .filter(col("token").isInCollection(terms))
     // same §2.6 overlap as [[bm25]]: the one-row stats read and the
     // postings-sliver materialization are independent jobs
-    val (n, avgdl, tfP) = overlapStatsWithPostings(statsDf, tf)
-    scoreBm25(tfP, idCol, terms, n, avgdl, k1, b, topN, scoreDecimals)
+    overlapStatsWithPostings(statsDf, tf)(
+      scoreBm25(_, idCol, terms, _, _, k1, b, topN, scoreDecimals))
   }
 
   /** Shared scoring tail over a (idCol, dl, token, tf) postings frame.
-    * The frame is persisted: both the df aggregation and the scored
-    * output read it — without the pin Spark recomputes the lineage (no
-    * exchange reuse fires across the two subtrees; measured round 10).
-    * Size is bounded by |matching docs| x |terms| — small by retrieval
-    * selectivity, same rationale as the other ops' signature pins.
+    * The frame arrives pinned ([[overlapStatsWithPostings]]): both the df
+    * aggregation and the scored output read it — without the pin Spark
+    * recomputes the lineage (no exchange reuse fires across the two
+    * subtrees; measured round 10). Size is bounded by |matching docs| x
+    * |terms| — small by retrieval selectivity, same rationale as the
+    * other ops' signature pins.
     *
-    * Cache lifecycle: the pin is released before returning — the top-N
-    * result (<= topN rows BY CONTRACT) is collected and re-wrapped as a
-    * LocalRelation, then the postings frame unpersists. Nothing stays in
-    * the block manager: repeated bm25 calls in a long-lived session
+    * Cache lifecycle: the top-N result (<= topN rows BY CONTRACT) is
+    * collected and re-wrapped as a LocalRelation, so the caller can
+    * release the postings pin on return. Nothing stays in the block
+    * manager: repeated bm25 calls in a long-lived session
     * accumulate NEITHER cache pins nor checkpoint blocks (the round-11
     * localCheckpoint draft leaked one persisted RDD per call). The
     * scoring plan itself is package-visible as [[scoreBm25Plan]] so the
     * plan-invariants suite can keep its join strategy locked even though
     * the returned frame no longer carries it.
     */
-  private def scoreBm25(tfIn: DataFrame, idCol: String, terms: Seq[String],
+  private def scoreBm25(tf: DataFrame, idCol: String, terms: Seq[String],
                         n: Long, avgdl: Double, k1: Double, b: Double,
                         topN: Int, scoreDecimals: Int): DataFrame = {
-    val tf = tfIn.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
     // document frequency per term: |terms| rows -> broadcast
     val dfreq = tf.groupBy("token").agg(count(lit(1)).as("df"))
 
@@ -181,11 +186,8 @@ object Retrieval {
       .limit(topN)
     // materialize the k-bounded rows and return them as a LocalRelation:
     // self-contained, GC-managed, zero block-manager footprint
-    val spark = tfIn.sparkSession
-    val result = spark.createDataFrame(
+    tf.sparkSession.createDataFrame(
       java.util.Arrays.asList(lazyResult.collect(): _*), lazyResult.schema)
-    tf.unpersist()
-    result
   }
 
   /** The scoring plan over a (idCol, dl, token, tf) postings frame,

@@ -616,7 +616,7 @@ object TextDedup {
     * square of the pile; overhead is a few fixed joins), so overall dup
     * RATIO is the wrong predicate: a 10k-copy pile inside a 10M-doc
     * corpus is 0.1% dups and still a 10⁸-candidate prefix join. Measured
-    * crossover (SkewBench ngram, 5000-doc base): collapse ~2× slower at a
+    * crossover (SCALE.md round 8, ngram, 5000-doc base): collapse ~2× slower at a
     * 2k pile, break-even ~4-8k, 10× faster at 16k and growing
     * quadratically — 4096 sits below every size where the win matters
     * and above the sizes where the overhead shows.
@@ -626,40 +626,20 @@ object TextDedup {
   /** Memoized preflight for [[ngramJaccardPairsManaged]]'s collapse
     * decision: does any identical-shingle-set group reach
     * [[CollapseMinGroup]]? One bounded aggregation (group sizes over the
-    * hashed set → max), memoized per semantic plan like
-    * [[Blocking.resolveAutoCap]] — repeated queries over a stored corpus
-    * pay it once. A borderline corpus merely picks the plain path, which
+    * hashed set → max), memoized per semantic plan in [[graft.io.Memo]]
+    * like [[Blocking.resolveAutoCap]] — repeated queries over a stored
+    * corpus pay it once, whatever the threshold. A borderline corpus merely picks the plain path, which
     * is always correct.
     */
   private def dupHeavy(base: DataFrame, minGroup: Long): Boolean = {
-    // Bucket-keyed on the 32-bit plan hash, but a hit requires structural
-    // equality of the stored canonicalized plan (plus the threshold) —
-    // two distinct plans whose hashes collide can never share a decision
-    // (the loser just re-runs the bounded preflight). The job runs
-    // outside the map so concurrent decisions never serialize on a bin
-    // lock; a cold-plan race at worst duplicates the aggregation.
-    // Same append-staleness contract as [[Blocking.resolveAutoCap]]:
-    // [[graft.pipelines.CorpusStore]]'s mutators clear this memo too.
-    val plan = base.queryExecution.logical.canonicalized
-    val key = Integer.valueOf(plan.hashCode() * 31 + minGroup.hashCode())
-    val cached = dupHeavyMemo.get(key)
-    if (cached != null && cached._1 == plan && cached._2 == minGroup) cached._3
-    else {
-      if (dupHeavyMemo.size > 1024) dupHeavyMemo.clear()
+    val mx = graft.io.Memo.plan(base, "textdedup.maxGroup") {
       val r = base.groupBy(xxhash64(col("__sh")).as("__h"))
         .agg(count(lit(1)).as("__gsz"))
         .agg(max(col("__gsz")).as("mx")).collect()(0)
-      val heavy = !r.isNullAt(0) && r.getLong(0) >= minGroup
-      dupHeavyMemo.putIfAbsent(key, (plan, minGroup, heavy))
-      heavy
+      if (r.isNullAt(0)) 0L else r.getLong(0)
     }
+    mx >= minGroup
   }
-
-  private[graft] def clearDupHeavyMemo(): Unit = dupHeavyMemo.clear()
-
-  private val dupHeavyMemo = new java.util.concurrent.ConcurrentHashMap[
-    Integer,
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Long, Boolean)]()
 
   /** Portable 60-bit token hash: the first 15 hex chars of md5, parsed as an
     * integer — computable bit-identically in any engine with md5 (DuckDB:

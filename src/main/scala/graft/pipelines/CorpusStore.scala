@@ -3,7 +3,6 @@ package graft.pipelines
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.ops.{Blocking, TextDedup}
 import graft.streaming.{LshStream, VecStream}
 
 /** Durable parquet layout of a [[CorpusPipeline.CorpusState]] — the ONE
@@ -48,12 +47,10 @@ import graft.streaming.{LshStream, VecStream}
   *   - pre-round-9 flat stores (`<dir>/<table>`) still read, and migrate
   *     to generations on their next snapshot commit.
   *
-  * Every mutator also drops the session's plan-keyed preflight memos
-  * ([[Blocking.clearAutoCapMemo]] and the PPJoin collapse memo): a memo
-  * entry resolved against the pre-mutation store would otherwise serve a
-  * one-batch-stale cap to the next query over the same path (plan-shape
-  * staleness only — results stay correct — but the guard's whole point is
-  * reacting to what just got appended, e.g. a boilerplate pile).
+  * Every mutator also clears the session's [[graft.io.Memo]]. Its entries
+  * already validate against the files under each path (so the auto-cap
+  * guard reacts to what just got appended, e.g. a boilerplate pile); the
+  * clear drops the superseded entries no later query can hit.
   */
 object CorpusStore {
 
@@ -76,7 +73,7 @@ object CorpusStore {
       stageTable(state.buckets, dir, "buckets"),
       stageTable(state.labels, dir, "labels"))
     gcs.foreach(_.apply())
-    clearPlanMemos()
+    clearPlanMemos(state.labels.sparkSession)
   }
 
   /** APPEND-ONLY batch commit — the deployment write path: each batch
@@ -103,7 +100,7 @@ object CorpusStore {
     // store-READ state (the steady-state shape), the new labels' lineage
     // lazily scans the generation being superseded
     commitTable(r.state.labels.localCheckpoint(), dir, "labels")
-    clearPlanMemos()
+    clearPlanMemos(spark)
   }
 
   /** Periodic store maintenance after a run of [[appendBatch]] commits:
@@ -131,7 +128,7 @@ object CorpusStore {
       stageTable(s.buckets.coalesce(targetFiles), dir, "buckets"),
       stageTable(starPairs.coalesce(targetFiles), dir, "pairs"))
     gcs.foreach(_.apply())
-    clearPlanMemos()
+    clearPlanMemos(spark)
   }
 
   /** Re-open a stored state (lazy scans; hand to [[CorpusPipeline.ingest]]
@@ -178,7 +175,7 @@ object CorpusStore {
     * brief cold window (the swap call itself re-materializes before
     * returning), which is the correct trade against serving a stale
     * snapshot forever. StoreDurabilitySpec drives ingest → refresh → tag
-    * on the round trip; UnifiedDemo uses it between the tiers.
+    * on the round trip.
     */
   def refreshServedIndex(spark: SparkSession, dir: String, idCol: String,
                          previous: Option[LshStream.ServedIndex],
@@ -284,12 +281,10 @@ object CorpusStore {
     }
   }
 
-  /** Drop the session's plan-keyed guard memos after a store mutation —
-    * see object doc. Cheap (two map clears), so every mutator calls it
-    * unconditionally rather than tracking which paths were resolved.
+  /** Drop the session's memo after a store mutation — see object doc.
+    * Cheap (one map clear), so every mutator calls it unconditionally
+    * rather than tracking which paths were resolved.
     */
-  private def clearPlanMemos(): Unit = {
-    Blocking.clearAutoCapMemo()
-    TextDedup.clearDupHeavyMemo()
-  }
+  private def clearPlanMemos(spark: SparkSession): Unit =
+    graft.io.Memo.clear(spark)
 }

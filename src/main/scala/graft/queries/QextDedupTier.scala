@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.io.Sources
+import graft.io.{Memo, Sources}
 import graft.ops._
 
 
@@ -27,19 +27,22 @@ private[queries] trait QextDedupTier { this: QextBase =>
       .orderBy("doc_id")
 
 
+  /** MinHash signature store ([[TextDedup.minhashPrepare]] written to
+    * parquet once per session and corpus, in [[Memo.store]]). This is the
+    * real pipeline's shape — signatures are computed at INGEST and
+    * persisted in the corpus store; every later dedup run starts from the
+    * stored table ([[TextDedup.minhashPairsFromPrepared]]) instead of
+    * re-signing the corpus, so q_ext_dedup_minhash and q_ext_dedup_groups
+    * share one signature pass.
+    */
   private def minhashStore(spark: SparkSession, dir: String): DataFrame = {
-    sigStoreCleanup // register the hook once, before the first store exists
-    val path = sigStores.computeIfAbsent(dir, _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft-sigstore-")
-      TextDedup.minhashPrepare(t(spark, dir, "documents"), "doc_id", "text",
+    val docs = t(spark, dir, "documents")
+    val path = Memo.store(docs, "sigstore") { p =>
+      TextDedup.minhashPrepare(docs, "doc_id", "text",
           shingleN = 3, numHashes = 64)
-        .write.mode("overwrite").parquet(p.toString)
-      p.toString
-    })
-    // memoized resolution (round-20): the store is write-once per (JVM,
-    // dir) by the computeIfAbsent above — re-resolving cost ~90 ms of
-    // driver time per query build (tools/ReadCostProbe)
-    graft.io.Sources.pathTable(spark, path)
+        .write.mode("overwrite").parquet(p)
+    }
+    Sources.pathTable(spark, path)
   }
 
 
@@ -232,9 +235,7 @@ private[queries] trait QextDedupTier { this: QextBase =>
     */
   def qExtSemdedup(spark: SparkSession, dir: String): DataFrame = {
     val e = t(spark, dir, "embeddings")
-    val model = ivfFixedModels.computeIfAbsent(dir,
-      _ => Ivf.fixedModel(e, "vec_id", "embedding", (0 until 16).map(_ * 31L)))
-    SemDedup.dedup(e, "vec_id", "embedding", model, tau = 0.4)
+    SemDedup.dedup(e, "vec_id", "embedding", fixedIvf(e), tau = 0.4)
       .orderBy("vec_id")
   }
 

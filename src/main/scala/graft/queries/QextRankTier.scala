@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.io.Sources
+import graft.io.Memo
 import graft.ops._
 
 
@@ -18,22 +18,14 @@ import graft.ops._
 private[queries] trait QextRankTier { this: QextBase =>
 
 
-  /** Per-(JVM, sf dir) BM25 inverted index ([[Retrieval.buildIndex]]),
-    * built once on first use — the ingest-then-query shape, same
-    * lifecycle as [[minhashStore]] (tmpdir + shutdown-hook cleanup).
+  /** BM25 inverted index ([[Retrieval.buildIndex]]) of the corpus, built
+    * once per session and corpus in [[Memo.store]] — the
+    * ingest-then-query shape, same lifecycle as the minhash store.
     */
-  private val bm25Indexes = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-
   private def bm25Index(spark: SparkSession, dir: String): String = {
-    sigStoreCleanup // shared hook; bm25Indexes registers through sigStores
-    bm25Indexes.computeIfAbsent(dir, _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft-bm25index-")
-      Retrieval.buildIndex(t(spark, dir, "documents"), "doc_id", "text",
-        p.toString)
-      sigStores.put(s"bm25:$dir", p.toString) // ride the cleanup hook
-      p.toString
-    })
+    val docs = t(spark, dir, "documents")
+    Memo.store(docs, "bm25index")(
+      Retrieval.buildIndex(docs, "doc_id", "text", _))
   }
 
 
@@ -105,10 +97,14 @@ private[queries] trait QextRankTier { this: QextBase =>
       // dense jobs run NOW, overlapped, not at fusion time
       spark.createDataFrame(java.util.Arrays.asList(d.collect(): _*), d.schema)
     }
-    val sparse = scala.concurrent.Await.result(
-      sparseF, scala.concurrent.duration.Duration.Inf)
-    val dense = scala.concurrent.Await.result(
-      denseF, scala.concurrent.duration.Duration.Inf)
+    // await BOTH legs before surfacing a failure: rethrowing the first
+    // while the other still runs would leave its jobs (and bm25's cache
+    // pin) live past the call
+    def await[T](f: scala.concurrent.Future[T]) = scala.util.Try(
+      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
+    val (sparseT, denseT) = (await(sparseF), await(denseF))
+    val sparse = sparseT.get
+    val dense = denseT.get
     Retrieval.rrfFuse(sparse, dense, "doc_id",
         rankA = "rank_sparse", rankB = "rank_dense", topN = 20)
       .orderBy(col("rrf").desc, col("doc_id").asc)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.io.Sources
+import graft.io.Memo
 import graft.ops._
 
 
@@ -81,15 +81,12 @@ private[queries] trait QextSimTier { this: QextBase =>
     * DuckDB CTEs for an exact oracle; measured recall is identical to the
     * avg-based trainer, 36/40 vs fixed-centroid 23/40 at sf0.01).
     */
-  // training is deterministic per dataset, so repeated invocations (Bench
-  // warms up then times every query) reuse the model instead of re-training
-  private val ivfModels = new java.util.concurrent.ConcurrentHashMap[String, Ivf.Model]()
-
-
   def qExtSimIvf(spark: SparkSession, dir: String): DataFrame = {
     val e = t(spark, dir, "embeddings")
-    val model = ivfModels.computeIfAbsent(dir,
-      _ => Ivf.trainPortable(e, "vec_id", "embedding", k = 16, iters = 2))
+    // training is deterministic per dataset, so repeated invocations (Bench
+    // warms up then times every query) reuse the model instead of re-training
+    val model = Memo.plan(e, "ivf.trained")(
+      Ivf.trainPortable(e, "vec_id", "embedding", k = 16, iters = 2))
     Ivf.annTopK(e.filter(col("vec_id") < 8), e, "vec_id", "embedding",
         model, k = 5, nprobe = 4)
       .orderBy("query_id", "rank")
@@ -104,8 +101,7 @@ private[queries] trait QextSimTier { this: QextBase =>
     */
   def qExtSimIvfFixed(spark: SparkSession, dir: String): DataFrame = {
     val e = t(spark, dir, "embeddings")
-    val model = ivfFixedModels.computeIfAbsent(dir,
-      _ => Ivf.fixedModel(e, "vec_id", "embedding", (0 until 16).map(_ * 31L)))
+    val model = fixedIvf(e)
     Ivf.annTopK(e.filter(col("vec_id") < 8), e, "vec_id", "embedding",
         model, k = 5, nprobe = 4)
       .orderBy("query_id", "rank")
@@ -121,8 +117,7 @@ private[queries] trait QextSimTier { this: QextBase =>
     */
   def qExtPqCodes(spark: SparkSession, dir: String): DataFrame = {
     val e = t(spark, dir, "embeddings")
-    val cb = pqCodebooks.computeIfAbsent(dir,
-      _ => Pq.fixedCodebook(e, "vec_id", "embedding", (0 until 16).map(_ * 31L), m = 4))
+    val cb = fixedPq(e)
     Pq.encode(e, "vec_id", "embedding", cb)
       .select(col("vec_id"),
         element_at(col("codes"), 1).as("c0"), element_at(col("codes"), 2).as("c1"),
@@ -131,8 +126,12 @@ private[queries] trait QextSimTier { this: QextBase =>
   }
 
 
-  private val pqCodebooks =
-    new java.util.concurrent.ConcurrentHashMap[String, Pq.Codebook]()
+  /** The fixed PQ codebook (m=4, codewords from vec_ids 0, 31, …, 465) of
+    * an embeddings frame, memoized on its plan.
+    */
+  private def fixedPq(e: DataFrame): Pq.Codebook =
+    Memo.plan(e, "pq.fixed")(
+      Pq.fixedCodebook(e, "vec_id", "embedding", (0 until 16).map(_ * 31L), m = 4))
 
 
   /** PQ asymmetric-distance top-5 ([[Pq.adcTopK]]): the unquantized query
@@ -144,8 +143,7 @@ private[queries] trait QextSimTier { this: QextBase =>
     */
   def qExtPqAdc(spark: SparkSession, dir: String): DataFrame = {
     val e = t(spark, dir, "embeddings")
-    val cb = pqCodebooks.computeIfAbsent(dir,
-      _ => Pq.fixedCodebook(e, "vec_id", "embedding", (0 until 16).map(_ * 31L), m = 4))
+    val cb = fixedPq(e)
     Pq.adcTopK(e.filter(col("vec_id") < 8), Pq.encode(e, "vec_id", "embedding", cb),
         "vec_id", "embedding", "vec_id", cb, topK = 5)
       .orderBy("query_id", "rank")
@@ -160,10 +158,8 @@ private[queries] trait QextSimTier { this: QextBase =>
     */
   def qExtPqIvfAdc(spark: SparkSession, dir: String): DataFrame = {
     val e = t(spark, dir, "embeddings")
-    val model = ivfFixedModels.computeIfAbsent(dir,
-      _ => Ivf.fixedModel(e, "vec_id", "embedding", (0 until 16).map(_ * 31L)))
-    val cb = pqCodebooks.computeIfAbsent(dir,
-      _ => Pq.fixedCodebook(e, "vec_id", "embedding", (0 until 16).map(_ * 31L), m = 4))
+    val model = fixedIvf(e)
+    val cb = fixedPq(e)
     Pq.ivfAdcTopK(e.filter(col("vec_id") < 8), e, "vec_id", "embedding",
         "vec_id", model, cb, topK = 5, nprobe = 4)
       .orderBy("query_id", "rank")
@@ -177,8 +173,7 @@ private[queries] trait QextSimTier { this: QextBase =>
     */
   def qExtPqRerank(spark: SparkSession, dir: String): DataFrame = {
     val e = t(spark, dir, "embeddings")
-    val cb = pqCodebooks.computeIfAbsent(dir,
-      _ => Pq.fixedCodebook(e, "vec_id", "embedding", (0 until 16).map(_ * 31L), m = 4))
+    val cb = fixedPq(e)
     Pq.adcRerankTopK(e.filter(col("vec_id") < 8), e, "vec_id", "embedding",
         "vec_id", cb, topK = 5, shortlist = 50)
       .orderBy("query_id", "rank")
@@ -203,9 +198,7 @@ private[queries] trait QextSimTier { this: QextBase =>
     val r = e.select(col("vec_id"),
       graft.functions.VectorExpressions.vec_rotate(col("embedding"))
         .as("embedding"))
-    val cb = pqCodebooks.computeIfAbsent(dir + "#rot",
-      _ => Pq.fixedCodebook(r, "vec_id", "embedding",
-        (0 until 16).map(_ * 31L), m = 4))
+    val cb = fixedPq(r)
     Pq.adcRerankTopK(r.filter(col("vec_id") < 8), r, "vec_id", "embedding",
         "vec_id", cb, topK = 5, shortlist = 50)
       .orderBy("query_id", "rank")
@@ -220,23 +213,18 @@ private[queries] trait QextSimTier { this: QextBase =>
     */
   def qExtPqIvfResidual(spark: SparkSession, dir: String): DataFrame = {
     val e = t(spark, dir, "embeddings")
-    val model = ivfFixedModels.computeIfAbsent(dir,
-      _ => Ivf.fixedModel(e, "vec_id", "embedding", (0 until 16).map(_ * 31L)))
+    val model = fixedIvf(e)
     // codeword-source ids deliberately DISJOINT from the centroid ids:
     // a centroid's residual against itself is the zero vector, and a
     // codebook of 16 zero codewords degenerates every code to the
     // tie-break (caught by the first recall probe)
-    val cb = pqResidualCodebooks.computeIfAbsent(dir,
-      _ => Pq.residualCodebook(e, "vec_id", "embedding",
+    val cb = Memo.plan(e, "pq.residual")(
+      Pq.residualCodebook(e, "vec_id", "embedding",
         (0 until 16).map(_ * 31L + 7L), m = 4, model))
     Pq.ivfAdcResidualTopK(e.filter(col("vec_id") < 8), e, "vec_id",
         "embedding", "vec_id", model, cb, topK = 5, nprobe = 4)
       .orderBy("query_id", "rank")
   }
-
-
-  private val pqResidualCodebooks =
-    new java.util.concurrent.ConcurrentHashMap[String, Pq.Codebook]()
 
 
   /** IVF-pruned ADC shortlist + exact cosine re-rank
@@ -249,10 +237,8 @@ private[queries] trait QextSimTier { this: QextBase =>
     */
   def qExtPqIvfRerank(spark: SparkSession, dir: String): DataFrame = {
     val e = t(spark, dir, "embeddings")
-    val model = ivfFixedModels.computeIfAbsent(dir,
-      _ => Ivf.fixedModel(e, "vec_id", "embedding", (0 until 16).map(_ * 31L)))
-    val cb = pqCodebooks.computeIfAbsent(dir,
-      _ => Pq.fixedCodebook(e, "vec_id", "embedding", (0 until 16).map(_ * 31L), m = 4))
+    val model = fixedIvf(e)
+    val cb = fixedPq(e)
     Pq.ivfAdcRerankTopK(e.filter(col("vec_id") < 8), e, "vec_id",
         "embedding", "vec_id", model, cb, topK = 5, nprobe = 4,
         shortlist = 20)
@@ -269,18 +255,14 @@ private[queries] trait QextSimTier { this: QextBase =>
     */
   def qExtPqCodesTrained(spark: SparkSession, dir: String): DataFrame = {
     val e = t(spark, dir, "embeddings")
-    val cb = pqTrainedCodebooks.computeIfAbsent(dir,
-      _ => Pq.trainPortable(e, "vec_id", "embedding", m = 4, k = 16, iters = 2))
+    val cb = Memo.plan(e, "pq.trained")(
+      Pq.trainPortable(e, "vec_id", "embedding", m = 4, k = 16, iters = 2))
     Pq.encode(e, "vec_id", "embedding", cb)
       .select(col("vec_id"),
         element_at(col("codes"), 1).as("c0"), element_at(col("codes"), 2).as("c1"),
         element_at(col("codes"), 3).as("c2"), element_at(col("codes"), 4).as("c3"))
       .orderBy("vec_id")
   }
-
-
-  private val pqTrainedCodebooks =
-    new java.util.concurrent.ConcurrentHashMap[String, Pq.Codebook]()
 
 
   /** Topic keywords per semantic cluster: embedding-space clustering
@@ -291,8 +273,7 @@ private[queries] trait QextSimTier { this: QextBase =>
     */
   def qExtClusterTopics(spark: SparkSession, dir: String): DataFrame = {
     val e = t(spark, dir, "embeddings")
-    val model = ivfFixedModels.computeIfAbsent(dir,
-      _ => Ivf.fixedModel(e, "vec_id", "embedding", (0 until 16).map(_ * 31L)))
+    val model = fixedIvf(e)
     val assigned = e
       .select(col("vec_id").as("doc_id"),
         Ivf.assignExpr(col("embedding"), model).as("cluster"))
@@ -318,8 +299,7 @@ private[queries] trait QextSimTier { this: QextBase =>
     */
   def qExtClusterAssign(spark: SparkSession, dir: String): DataFrame = {
     val e = t(spark, dir, "embeddings")
-    val model = ivfFixedModels.computeIfAbsent(dir,
-      _ => Ivf.fixedModel(e, "vec_id", "embedding", (0 until 16).map(_ * 31L)))
+    val model = fixedIvf(e)
     SemDedup.clusterSizes(e, "vec_id", "embedding", model)
       .orderBy("cluster")
   }

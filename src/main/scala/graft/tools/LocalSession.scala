@@ -2,9 +2,9 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared local-session builder for the dev harnesses (Smoke, demos, Explain,
-  * TimeOne, Profile) — one place for the UTC/nanosAsLong/partition settings
-  * instead of seven copies.
+/** Shared local-session builder for the dev harnesses (Smoke, PipelineDemo,
+  * Explain, TimeOne, …) — one place for the UTC/nanosAsLong/partition
+  * settings instead of one copy per harness.
   */
 object LocalSession {
   def apply(cores: Int = 4, logLevel: String = "WARN"): SparkSession = {
@@ -22,7 +22,7 @@ object LocalSession {
       // misra_gries) have BOUNDED per-group buffers by design, so the
       // ObjectHashAggregate sort-based fallback (default: 128 distinct
       // keys per task!) only costs — measured 5.4s -> 0.5s on the
-      // 100x top-k-per-group (tools/FallbackProbe, SCALE.md round 10).
+      // 100x top-k-per-group (SCALE.md round 10).
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         "131072")
       .getOrCreate()

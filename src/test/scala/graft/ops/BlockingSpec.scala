@@ -82,22 +82,22 @@ class BlockingSpec extends SparkSpec {
   }
 
   it should "record its decisions in the observability log" in {
-    Blocking.clearAutoCapMemo()
+    graft.io.Memo.clear(spark)
     val prepared = TextDedup.minhashPrepare(degenerateDocs(600), "doc_id", "text")
       .persist()
     try {
       TextDedup.minhashCandidates(prepared, "doc_id").count()
-      val engaged = Blocking.resolutions.values.filter(_.engaged)
+      val engaged = Blocking.resolutions(spark).filter(_.engaged)
       engaged should have size 1
       // evidence: the pile bucket is the max block, far over the cap
       engaged.head.maxBlock should be >= 600L
       engaged.head.cap should be < engaged.head.maxBlock
-    } finally { prepared.unpersist(); Blocking.clearAutoCapMemo() }
+    } finally { prepared.unpersist(); graft.io.Memo.clear(spark) }
   }
 
   it should "be a pair-set no-op on the real documents corpus" in {
     // every block on the oracle corpus sits far below the auto floor
-    // (BucketProbe: minhash max 3-4, sf0.01/0.1), so default-on auto must
+    // (SCALE.md round 8: minhash max 3-4, sf0.01/0.1), so default-on auto must
     // emit the EXACT uncapped pair set — the property the DuckDB oracle
     // relies on (q_ext_dedup_minhash/simhash unchanged under the default)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")

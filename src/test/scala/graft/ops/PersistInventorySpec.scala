@@ -28,9 +28,14 @@ import org.scalatest.matchers.should.Matchers
   *    ([[Managed.ensurePersisted]]): persists only when the plan is not
   *    already cached; the pin's lifecycle belongs to the CALLING site.
   *
-  * `tools/` is excluded: probes are one-shot measurement mains, not
-  * library surface. RegistryLifecycleSpec asserts the RUNTIME half — the
+  * `tools/` is excluded: dev harnesses are one-shot mains, not library
+  * surface. RegistryLifecycleSpec asserts the RUNTIME half — the
   * persistent-RDD map returns to baseline after each registry query.
+  *
+  * The memo-site scan does the same for cross-call state: every memo lives
+  * in [[graft.io.Memo]] (session-scoped, input-validated), so a concurrent
+  * or weak map declared anywhere else under src/main/scala must be
+  * allow-listed below with the reason it is not a memo.
   */
 class PersistInventorySpec extends AnyFlatSpec with Matchers {
 
@@ -46,11 +51,9 @@ class PersistInventorySpec extends AnyFlatSpec with Matchers {
     "ops/Hits.scala" -> (4, Managed), // hitsManaged: graph frames + iterates
     "ops/PageRank.scala" -> (5, Managed), // pageRank/trustRankManaged
     "ops/Profiler.scala" -> (1, Released), // rank-select scratch, read twice
-    // round 20: overlapStatsWithPostings pins the postings frame before
-    // filling it concurrently with the stats job; scoreBm25's own persist
-    // call then ALIASES the same plan (CacheManager dedups), and its
-    // existing unpersist releases the one shared entry.
-    "ops/Retrieval.scala" -> (2, Released), // BM25 tf table, freed post-topN
+    // overlapStatsWithPostings pins the postings frame once and frees it
+    // in a finally, after the top-N collect or any failure.
+    "ops/Retrieval.scala" -> (1, Released), // BM25 tf table, freed post-topN
     // round 15: the warm-path pins (Sampling prefix-sum scratch, SemDedup
     // assignment, SpanDedup occurrences, TextDedup ppjoin/simhash
     // signatures) route through Managed.ensurePersisted — persist only
@@ -73,19 +76,63 @@ class PersistInventorySpec extends AnyFlatSpec with Matchers {
   private val root = Paths.get("src/main/scala/graft")
   private val pinSite = raw"(\.persist\(|\.cache\(\))".r
 
-  private def sources: Seq[java.nio.file.Path] = {
+  private def allSources: Vector[java.nio.file.Path] = {
     val s = Files.walk(root)
-    try s.iterator().asScala.filter(p => p.toString.endsWith(".scala") &&
-      !root.relativize(p).toString.startsWith("tools/")).toVector
+    try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toVector
     finally s.close()
   }
 
-  private def pinCount(p: java.nio.file.Path): Int =
-    Files.readAllLines(p).asScala
-      .map(_.trim)
-      // comment lines legitimately DISCUSS persisting; only code pins
+  private def sources: Seq[java.nio.file.Path] =
+    allSources.filterNot(p => root.relativize(p).toString.startsWith("tools/"))
+
+  /** Source lines minus comment lines: comments legitimately DISCUSS
+    * persisting and memo maps; only code counts.
+    */
+  private def codeLines(p: java.nio.file.Path): Vector[String] =
+    Files.readAllLines(p).asScala.map(_.trim)
       .filterNot(l => l.startsWith("*") || l.startsWith("//") || l.startsWith("/*"))
-      .map(l => pinSite.findAllIn(l).size).sum
+      .toVector
+
+  private def pinCount(p: java.nio.file.Path): Int =
+    codeLines(p).map(l => pinSite.findAllIn(l).size).sum
+
+  /** file (relative to src/main/scala/graft) -> why its map is not a memo. */
+  private val mapAllowList: Map[String, String] = Map(
+    "io/Storage.scala" -> ("InMemory.staged: one adapter instance's " +
+      "fetch-once staging of its own immutable bytes; dies with the instance")
+  )
+
+  private val decl = raw"\bva[lr]\s+\w+".r
+  private val mapType = raw"\b(ConcurrentHashMap|TrieMap|WeakHashMap)\b".r
+
+  /** `val`/`var` declarations of a map type in one file; an initializer
+    * that starts on the next line (`val m =` + `new ...`) is joined first.
+    */
+  private def mapDecls(p: java.nio.file.Path): Int = {
+    val ls = codeLines(p)
+    ls.indices.count { i =>
+      val stmt = if (ls(i).endsWith("=")) ls(i) + " " + ls.lift(i + 1).getOrElse("")
+                 else ls(i)
+      decl.findFirstIn(ls(i)).isDefined && mapType.findFirstIn(stmt).isDefined
+    }
+  }
+
+  "the memo-site scan" should "find no concurrent or weak map outside Memo.scala" in {
+    root.toFile.isDirectory shouldBe true // run from the repo root
+    val found = allSources
+      .map(p => root.relativize(p).toString -> mapDecls(p))
+      .filter { case (f, n) => n > 0 && f != "io/Memo.scala" }.toMap
+    withClue("a ConcurrentHashMap/TrieMap/WeakHashMap declared outside " +
+      "io/Memo.scala: route the memo through graft.io.Memo, or allow-list " +
+      s"the file with the reason it is not a memo (now: $mapAllowList): ") {
+      found.keySet shouldBe mapAllowList.keySet
+    }
+    // the one exit hook cleans Memo's store directories
+    val hooks = allSources.map(p => root.relativize(p).toString ->
+      codeLines(p).map(l => "addShutdownHook".r.findAllIn(l).size).sum)
+      .filter(_._2 > 0)
+    hooks shouldBe Vector("io/Memo.scala" -> 1)
+  }
 
   "the persist-site inventory" should "match the classified whitelist exactly" in {
     root.toFile.isDirectory shouldBe true // run from the repo root

@@ -136,4 +136,21 @@ class RetrievalSpec extends SparkSpec {
       .diff(before)
     withClue(s"leaked persistent RDDs $leaked: ") { leaked shouldBe empty }
   }
+
+  it should "rethrow a failed stats leg and still release the postings pin" in {
+    // every row raises, so the concurrent corpus-stats job fails (the
+    // postings fill reads the same column and fails with it); the error
+    // must surface from the call and the pin taken before both jobs must
+    // be gone afterwards
+    val docs = Seq((1L, "spark merge alpha"), (2L, "spark beta"))
+      .toDF("doc_id", "text")
+      .withColumn("text", when(col("doc_id") > 0,
+        raise_error(lit("injected stats failure"))).otherwise(col("text")))
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val e = intercept[Exception] {
+      Retrieval.bm25(docs, "doc_id", "text", Seq("spark"), topN = 5)
+    }
+    e.getMessage should include("injected stats failure")
+    spark.sparkContext.getPersistentRDDs.keySet.toSet shouldBe before
+  }
 }

@@ -145,7 +145,7 @@ class StoreDurabilitySpec extends SparkSpec {
       bench, "text")
     CorpusStore.appendBatch(r1, dir)
 
-    Blocking.clearAutoCapMemo()
+    graft.io.Memo.clear(spark)
     // resolve against the healthy stored bucket table: no block over the
     // derived cap, memoized no-op
     Blocking.resolveAutoCap(
@@ -161,12 +161,13 @@ class StoreDurabilitySpec extends SparkSpec {
     CorpusStore.appendBatch(rp, dir)
 
     // a FRESH read of the same path canonicalizes equal to the pre-append
-    // frame (file listings are not part of relation equality) — only the
-    // appendBatch-triggered memo clear makes this re-preflight and engage
+    // frame (file listings are not part of relation equality) — the memo's
+    // file fingerprint and the appendBatch-triggered clear each make this
+    // re-preflight and engage
     val cap = Blocking.resolveAutoCap(
       spark.read.parquet(s"$dir/buckets"), Seq("band", "bucket"))
     cap should be > 0
-    Blocking.resolutions.values.count(_.engaged) should be >= 1
+    Blocking.resolutions(spark).count(_.engaged) should be >= 1
   }
 
   "refreshServedIndex" should "swap to the store's current state and release the old cache" in {
